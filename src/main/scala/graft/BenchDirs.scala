@@ -26,7 +26,8 @@ object BenchDirs {
   def scratchDir(prefix: String): String =
     deleteOnExit(Files.createTempDirectory(Paths.get(scratchBase), prefix).toString)
 
-  private def deleteTree(p: Path): Unit =
+  /** Recursive best-effort delete (missing tree → no-op). */
+  def deleteTree(p: Path): Unit =
     if (Files.exists(p))
       scala.util.Using.resource(Files.walk(p)) { s =>
         s.sorted(java.util.Comparator.reverseOrder[Path]())
